@@ -100,7 +100,7 @@ object ConnectedComponents {
     val e = edges.select(col(aCol).as("u"), col(bCol).as("v")).localCheckpoint(true)
     val probed = e.limit(cap + 1).collect()
     if (probed.length > cap || probed.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      componentsWithRounds(e, "u", "v", maxIter, None)._1
+      fixpoint(e, materialized = true, maxIter, None)._1
     else driverLabels(edges.sparkSession, probed)
   }
 
@@ -140,7 +140,16 @@ object ConnectedComponents {
     * must close in 2-3 rounds; a length-n chain in O(log n) via the
     * doubling step). */
   def componentsWithRounds(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 30, checkpointDir: Option[String] = None): (DataFrame, Int) = {
+      maxIter: Int = 30, checkpointDir: Option[String] = None): (DataFrame, Int) =
+    fixpoint(edges.select(col(aCol).as("u"), col(bCol).as("v")),
+      materialized = false, maxIter, checkpointDir)
+
+  /** The distributed fixpoint over a `(u, v)` edge projection. When
+    * `materialized`, the projection is already an eager checkpoint (the
+    * fast path's overflow hands over the frame it probed) and is used as
+    * is rather than persisted a second time. */
+  private def fixpoint(edges: DataFrame, materialized: Boolean,
+      maxIter: Int, checkpointDir: Option[String]): (DataFrame, Int) = {
     val sc = edges.sparkSession.sparkContext
     // Reliable mode must also CLEAN UP: each round's checkpoint is a full
     // materialized copy of per-vertex state, nothing deletes them by
@@ -186,7 +195,8 @@ object ConnectedComponents {
     // frame and the initial labels (which must include self-loop-only
     // endpoints) derive from it, and upstream `edges` is often an expensive
     // pipeline (the near-dup candidate join) that must not run twice.
-    val (e, eCk) = persistRound(edges.select(col(aCol).as("u"), col(bCol).as("v")))
+    val (e, eCk) =
+      if (materialized) (edges, Set.empty[String]) else persistRound(edges)
     // Pre-partitioned BY THE ROUND-JOIN KEY: the checkpoint preserves the
     // hash partitioning (LogicalRDD keeps outputPartitioning), so every
     // round's neighbor join exchanges only the vertex-sized label frame —

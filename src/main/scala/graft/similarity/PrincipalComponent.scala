@@ -111,13 +111,16 @@ object PrincipalComponent {
       import spark.implicits._
       spark.createDataset(dims.map(i => (i, v(i))).toSeq).toDF("i", "v")
     } else {
-      var vec = sm.select(col("i")).distinct()
+      // Materialize S̃ once: the 12 power steps below each read it, and a
+      // lazy view would re-run its 3-way join + crossJoin in every step.
+      val smc = sm.localCheckpoint(true)
+      var vec = smc.select(col("i")).distinct()
         .select(col("i"),
           (pmod(portableHash60(concat(lit("pc0:"), col("i").cast("string"))),
             lit(2 * scale)) - scale).as("v"))
         .localCheckpoint(true)
       for (_ <- 1 to iterations) {
-        val u = sm.join(vec.select(col("i").as("j"), col("v")), "j")
+        val u = smc.join(vec.select(col("i").as("j"), col("v")), "j")
           .select(col("i"), (col("sv") * col("v")).as("p"))
           .groupBy(col("i")).agg(sum(col("p")).as("u"))
         val mx = u.agg(max(abs(col("u"))).as("mx"))

@@ -87,4 +87,46 @@ class SpreadSpec extends AnyFunSuite {
     }
     assert(on.map(_.toString).sorted == off.map(_.toString).sorted)
   }
+  /** Spark jobs the body starts from this thread. Listener delivery is
+    * async and in order, so a tagged sentinel job's arrival proves every
+    * earlier job start has been counted. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobs"
+    val id = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(tag)) match {
+          case Some(`id`) => started.incrementAndGet()
+          case Some(s) if s == s"$id-end" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(tag, id)
+      body
+      sc.setLocalProperty(tag, s"$id-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("an unchanged table loads with zero Spark jobs; a changed setting re-infers") {
+    val dir = GraftTestSpark.tmpDir("graft-resolve")
+    Tables.load(spark, GraftTestSpark.sfDir, "documents")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(jobsIn(Tables.load(spark, dir, "documents").schema) == 1)
+    assert(jobsIn(Tables.load(spark, dir, "documents").schema) == 0)
+    assert(jobsIn(Tables.loadSpread(spark, dir, "documents").schema) == 0)
+    withConf("spark.sql.parquet.binaryAsString", "true") {
+      assert(jobsIn(Tables.load(spark, dir, "documents").schema) == 1)
+    }
+  }
 }

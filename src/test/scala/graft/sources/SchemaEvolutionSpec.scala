@@ -96,4 +96,32 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](Tables.load(spark, dir, "documents"))
     assert(e.getMessage.contains("documents.n_chars"))
   }
+  test("a table rewritten in place is re-resolved: lossless then lossy drift") {
+    // One path, three file sets in one session. A resolution cached by path
+    // alone would keep the first schema: it would drop the new column and
+    // let the lossy rewrite through to fail at execution, not at the scan.
+    val dir = GraftTestSpark.tmpDir("drift-rewrite")
+    val path = s"$dir/documents.parquet"
+    val base = Tables.load(spark, sfDir, "documents")
+    base.write.mode("overwrite").parquet(path)
+    assert(rows(dir, "documents") == rows(sfDir, "documents"))
+
+    base.withColumn("doc_id", col("doc_id").cast("int"))
+      .withColumn("n_chars", (col("n_chars") + 1).cast("int"))
+      .withColumn("crawl_batch", lit("b8"))
+      .write.mode("overwrite").parquet(path)
+    val out = Tables.load(spark, dir, "documents")
+    assert(out.schema("doc_id").dataType.typeName == "long")
+    assert(out.schema("n_chars").dataType.typeName == "long")
+    assert(out.schema.fieldNames.last == "crawl_batch")
+    val want = base.withColumn("n_chars", col("n_chars") + 1)
+      .withColumn("crawl_batch", lit("b8"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(out.collect().map(_.toString).sorted.toSeq == want)
+
+    base.withColumn("n_chars", col("n_chars").cast("string"))
+      .write.mode("overwrite").parquet(path)
+    val e = intercept[IllegalStateException](Tables.load(spark, dir, "documents"))
+    assert(e.getMessage.contains("documents.n_chars"))
+  }
 }
